@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pyworker import python_kernel
 from .png import PNG_SIG, decode_png, luma
 
 MEDIA_SCHEMA = (
@@ -98,7 +99,7 @@ def extract_features(media: DataFrame, payload_col: str = "payload",
 
     cols = [id_col, payload_col] + (["kind"] if "kind" in media.columns else [])
     return media.select(*cols).mapInPandas(
-        kernel, schema="media_id long, features array<float>")
+        python_kernel(kernel), schema="media_id long, features array<float>")
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000,
@@ -185,5 +186,5 @@ def resize_images(media: DataFrame, width: int, height: int,
     if "kind" in media.columns:
         src = media.where(F.col("kind") == "image")
     return src.select(id_col, payload_col, width_col, height_col).mapInPandas(
-        kernel,
+        python_kernel(kernel),
         schema="media_id long, width long, height long, pixels array<long>")

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pyworker import python_kernel
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -71,7 +73,7 @@ def with_cosine_arrow(df: DataFrame, a: str, b: str,
             res[out] = np.round(dot / den, 6)
             yield res
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.mapInPandas(python_kernel(kernel), schema=out_schema)
 
 
 def cosine_pairs(emb: DataFrame, threshold: float,
@@ -158,7 +160,7 @@ def lsh_signatures(emb: DataFrame, dim: int, bits: int = 16,
             })
 
     return emb.select(id_col, vec_col).mapInPandas(
-        kernel, schema="id long, table int, bucket long")
+        python_kernel(kernel), schema="id long, table int, bucket long")
 
 
 def fit_ivf_centroids(emb: DataFrame, n_cells: int = 16,
@@ -231,7 +233,7 @@ def ivf_assignments(emb: DataFrame, centroids: np.ndarray,
                                 "cell": top.reshape(-1).astype(np.int32)})
 
     return emb.select(id_col, vec_col).mapInPandas(
-        kernel, schema="id long, cell int")
+        python_kernel(kernel), schema="id long, cell int")
 
 
 def ann_ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,

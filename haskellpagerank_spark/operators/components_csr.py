@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 
 from ..plans.checkpoint import IterationMetrics
+from ..pyworker import python_kernel
 from .components import IterativeResult
 from .graph import Graph, invert
 from .pagerank_csr import BLOCK_SCHEMA
@@ -64,8 +65,36 @@ def _build_blocks_und(g: Graph, num_blocks: int):
     und = g.edges.select("src", "dst").unionAll(invert(g.edges))
     return (
         und.repartition(num_blocks, "dst")
-        .mapInPandas(kernel, schema=BLOCK_SCHEMA)
+        .mapInPandas(python_kernel(kernel), schema=BLOCK_SCHEMA)
     )
+
+
+def _min_label_job(blocks, labels_bc) -> tuple[np.ndarray, np.ndarray]:
+    """One distributed min-label sweep -> (dst ids, per-block candidates)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        x = labels_bc.value
+        for pdf in batches:
+            ids, mins = [], []
+            for row in pdf.itertuples(index=False):
+                uniq = np.frombuffer(row.dsts, dtype=np.int64)
+                if len(uniq) == 0:
+                    continue
+                offs = np.frombuffer(row.offsets, dtype=np.int64)
+                usrcs = np.frombuffer(row.usrcs, dtype=np.int64)
+                src_pos = np.frombuffer(row.src_pos, dtype=np.int32)
+                ids.append(uniq)
+                mins.append(np.minimum.reduceat(x[usrcs][src_pos], offs))
+            if not ids:
+                yield pd.DataFrame({"id": pd.Series([], dtype="int64"),
+                                    "cand": pd.Series([], dtype="int64")})
+                continue
+            yield pd.DataFrame({"id": np.concatenate(ids),
+                                "cand": np.concatenate(mins)})
+
+    out = blocks.mapInPandas(python_kernel(kernel),
+                             schema="id long, cand long").toPandas()
+    return out["id"].to_numpy(np.int64), out["cand"].to_numpy(np.int64)
 
 
 def connected_components_spmv(g: Graph, max_iters: int = 200,
@@ -75,68 +104,48 @@ def connected_components_spmv(g: Graph, max_iters: int = 200,
     n = g.num_vertices
     num_blocks = num_blocks or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = _build_blocks_und(g, num_blocks).persist()
-    blocks.count()
     sc = spark.sparkContext
 
     labels = np.arange(n, dtype=np.int64)
     metrics: list[IterationMetrics] = []
     it = 0
-    while it < max_iters:
-        it += 1
-        t0 = time.monotonic()
-        bc = sc.broadcast(labels)
+    blocks = _build_blocks_und(g, num_blocks).persist()
+    try:
+        blocks.count()
+        while it < max_iters:
+            it += 1
+            t0 = time.monotonic()
+            bc = sc.broadcast(labels)
+            try:
+                ids, cands = _min_label_job(blocks, bc)
+            finally:
+                bc.destroy()
+            new = labels.copy()
+            if len(ids):
+                # sorted run-min then a vectorized compare-update — orders of
+                # magnitude faster than np.minimum.at (unbuffered ufunc.at)
+                order = np.argsort(ids, kind="stable")
+                ids_s, c_s = ids[order], cands[order]
+                head = np.empty(len(ids_s), dtype=bool)
+                head[0] = True
+                head[1:] = ids_s[1:] != ids_s[:-1]
+                starts = np.flatnonzero(head)
+                mins = np.minimum.reduceat(c_s, starts)
+                uids = ids_s[starts]
+                sel = mins < new[uids]
+                new[uids[sel]] = mins[sel]
+            changed = int((new != labels).sum())
+            metrics.append(IterationMetrics(
+                iteration=it, l1_residual=float(changed),
+                linf_residual=float(1 if changed else 0), rows_shuffled=0,
+                wall_s=time.monotonic() - t0,
+                extra={"changed": changed, "strategy": "spmv"}))
+            labels = new
+            if changed == 0:
+                break
+    finally:
+        blocks.unpersist()
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            x = bc.value
-            for pdf in batches:
-                ids, mins = [], []
-                for row in pdf.itertuples(index=False):
-                    uniq = np.frombuffer(row.dsts, dtype=np.int64)
-                    if len(uniq) == 0:
-                        continue
-                    offs = np.frombuffer(row.offsets, dtype=np.int64)
-                    usrcs = np.frombuffer(row.usrcs, dtype=np.int64)
-                    src_pos = np.frombuffer(row.src_pos, dtype=np.int32)
-                    ids.append(uniq)
-                    mins.append(np.minimum.reduceat(x[usrcs][src_pos], offs))
-                if not ids:
-                    yield pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                                        "cand": pd.Series([], dtype="int64")})
-                    continue
-                yield pd.DataFrame({"id": np.concatenate(ids),
-                                    "cand": np.concatenate(mins)})
-
-        out = blocks.mapInPandas(
-            kernel, schema="id long, cand long").toPandas()
-        bc.destroy()
-        new = labels.copy()
-        ids = out["id"].to_numpy(np.int64)
-        if len(ids):
-            # sorted run-min then a vectorized compare-update — orders of
-            # magnitude faster than np.minimum.at (unbuffered ufunc.at)
-            cands = out["cand"].to_numpy(np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids_s, c_s = ids[order], cands[order]
-            head = np.empty(len(ids_s), dtype=bool)
-            head[0] = True
-            head[1:] = ids_s[1:] != ids_s[:-1]
-            starts = np.flatnonzero(head)
-            mins = np.minimum.reduceat(c_s, starts)
-            uids = ids_s[starts]
-            sel = mins < new[uids]
-            new[uids[sel]] = mins[sel]
-        changed = int((new != labels).sum())
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=float(changed),
-            linf_residual=float(1 if changed else 0), rows_shuffled=0,
-            wall_s=time.monotonic() - t0,
-            extra={"changed": changed, "strategy": "spmv"}))
-        labels = new
-        if changed == 0:
-            break
-
-    blocks.unpersist()
     df = spark.createDataFrame(pd.DataFrame({
         "id": np.arange(n, dtype=np.int64), "component": labels}))
     return IterativeResult(df=df, iterations=it, metrics=metrics)

@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import CheckpointManager, IterationMetrics
+from ..pyworker import python_kernel
 from .graph import Graph, amend_sinks
 from .pagerank import PageRankConfig, PageRankResult, weighted_edges
 
@@ -264,7 +265,7 @@ def run_pagerank_async(g: Graph, cfg: PageRankConfig | None = None,
         swept = (
             state.groupBy("block")
             .cogroup(internal.groupBy("block"))
-            .applyInPandas(kernel, schema=out_schema)
+            .applyInPandas(python_kernel(kernel), schema=out_schema)
             .localCheckpoint(eager=True)
         )
         res = swept.agg(F.sum("delta").alias("l1"),

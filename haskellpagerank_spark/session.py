@@ -10,6 +10,25 @@ the ones that matter at both scales:
   pass ``shuffle_partitions ~ 2-3x total cores``.
 - Arrow enabled: every Python-side kernel in this engine is Arrow-batched
   (``mapInArrow`` / ``applyInPandas``), never per-row Python.
+- Driver heap: $SPARK_GRAFT_DRIVER_MEM when set, else 30% of physical
+  memory, at most 48g (an uncapped 48g default let a long local test run
+  grow the JVM past a 15 GB host's memory until it was OOM-killed).
+
+Per-task Python-worker cost. PySpark 4.1 starts every Python task with
+``importlib.invalidate_caches()``; on CPython <= 3.12 that re-reads the
+central directory of every zip archive the worker has imported from
+(``pyspark.zip`` once per imported subpackage, the py4j zip, the
+spark-core jar): 0.17-0.23 s of worker CPU per task, measured on a 4-core
+host with CPython 3.11.7 and PySpark 4.1.2, before the kernel starts.
+CPython 3.13 defers that re-read to the next import, so it is not
+affected. For an iterative kernel that cost is most of a sweep: a CSR SpMV
+PageRank sweep over ~420k edges in 4 blocks took 0.32-0.36 s (median
+0.33 s), about what a 4-task ``mapInPandas`` job that does nothing costs.
+Every kernel must therefore be submitted through ``pyworker.python_kernel``,
+which installs a guard in each worker so a reused worker re-reads only
+archives that changed; that brought the same sweep to 0.11-0.14 s (median
+0.13 s). tests/test_pyworker.py fails on a kernel call that bypasses it;
+scripts/worker_tax_probe.py measures the cost with and without the guard.
 """
 
 from __future__ import annotations
@@ -21,6 +40,17 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def default_driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else 30% of physical memory capped at 48g."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, int(phys * 0.3) >> 20)}m"
 
 
 def get_spark(
@@ -48,7 +78,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -53,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.graph import Graph, from_edge_df
+from ..pyworker import python_kernel
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -233,7 +234,7 @@ def generate_pages(spark: SparkSession, num_pages: int, seed: int = 42,
                              avg_links, hub_count, hub_prob_mod)
 
     return spark.range(0, num_pages, numPartitions=parts).mapInPandas(
-        gen, schema=PAGES_SCHEMA
+        python_kernel(gen), schema=PAGES_SCHEMA
     )
 
 
@@ -254,7 +255,7 @@ def extract_text(pages: DataFrame) -> DataFrame:
             yield pd.DataFrame({"url": b["url"], "text": text})
 
     return pages.select("url", "html").mapInPandas(
-        kernel, schema="url string, text string"
+        python_kernel(kernel), schema="url string, text string"
     )
 
 
@@ -277,7 +278,7 @@ def extract_links(pages: DataFrame) -> DataFrame:
             yield pd.DataFrame({"src_url": src, "dst_url": hits[0].to_numpy()})
 
     return pages.select("url", "html").mapInPandas(
-        kernel, schema="src_url string, dst_url string"
+        python_kernel(kernel), schema="src_url string, dst_url string"
     )
 
 
@@ -333,7 +334,7 @@ def encode_vertices(raw_edges: DataFrame) -> DataFrame:
             })
             pos += len(b)
 
-    out = urls.mapInPandas(kernel, schema="url string, id long")
+    out = urls.mapInPandas(python_kernel(kernel), schema="url string, id long")
     out = out.localCheckpoint(eager=True)
     urls.unpersist()
     # Invariant guard: correctness hinges on the persist() freezing the
@@ -416,7 +417,7 @@ def extract_anchors(pages: DataFrame) -> DataFrame:
                                 "anchor": hits[1].to_numpy()})
 
     return pages.select("url", "html").mapInPandas(
-        kernel, schema="src_url string, dst_url string, anchor string"
+        python_kernel(kernel), schema="src_url string, dst_url string, anchor string"
     )
 
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..pyworker import python_kernel
+
 DEGREE_OUTPUT_SCHEMA = "id long, out_deg long, in_deg long, is_hub boolean"
 DEGREE_STATE_SCHEMA = "out_deg long, in_deg long"
 
@@ -73,7 +75,7 @@ def running_degrees(edges: DataFrame,
         })
 
     return _degree_endpoints(edges).groupBy("id").applyInPandasWithState(
-        update,
+        python_kernel(update),
         outputStructType=DEGREE_OUTPUT_SCHEMA,
         stateStructType=DEGREE_STATE_SCHEMA,
         outputMode="update",

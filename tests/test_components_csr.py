@@ -6,6 +6,7 @@ import pytest
 
 from haskellpagerank_spark import oracle as O
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
+from haskellpagerank_spark.operators import components_csr
 from haskellpagerank_spark.operators.components import connected_components
 from haskellpagerank_spark.operators.components_csr import (
     connected_components_spmv)
@@ -31,3 +32,14 @@ def test_spmv_cc_disconnected(spark):
     g = from_pairs(spark, pairs)
     got = connected_components_spmv(g).df.toPandas().sort_values("id")
     assert got["component"].tolist() == [0, 0, 0, 3, 3, 3, 6]
+
+
+def test_failed_sweep_releases_blocks_and_broadcast(spark, fail_second_sweep):
+    g = from_pairs(spark, FIXTURE_EDGES["princeton"])
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    broadcasts = fail_second_sweep(components_csr, "_min_label_job")
+    with pytest.raises(RuntimeError, match="sweep failed"):
+        connected_components_spmv(g)
+    assert len(broadcasts) == 2
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+    assert not any(bc._jbroadcast.isValid() for bc in broadcasts)

@@ -9,6 +9,7 @@ import pytest
 
 from haskellpagerank_spark import oracle as O
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
+from haskellpagerank_spark.operators import pagerank_csr
 from haskellpagerank_spark.operators.graph import from_pairs
 from haskellpagerank_spark.operators.pagerank import (
     PageRankConfig, reference_config, run_pagerank)
@@ -142,3 +143,15 @@ def test_all_strategies_agree_on_random_graphs(spark, seed, sink_mode):
     np.testing.assert_allclose(c, a, rtol=1e-12, atol=1e-16)
     if sink_mode == "redistribute":
         assert abs(a.sum() - 1.0) < 1e-9
+
+
+
+def test_failed_sweep_releases_blocks_and_broadcast(spark, fail_second_sweep):
+    g = from_pairs(spark, FIXTURE_EDGES["doubleSquare"])
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    broadcasts = fail_second_sweep(pagerank_csr, "_spmv_job")
+    with pytest.raises(RuntimeError, match="sweep failed"):
+        run_pagerank_spmv(g, PageRankConfig(num_iters=5))
+    assert len(broadcasts) == 2
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+    assert not any(bc._jbroadcast.isValid() for bc in broadcasts)
